@@ -1,14 +1,22 @@
 """Similarity search over embedding columns (SURVEY.md §2.3).
 
-Two tiers, mirroring how ANN is actually run on large corpora:
+Tiers, mirroring how ANN is actually run on large corpora:
 
 - brute-force cosine top-k — the exact baseline: |Q| x |N| cross join with a
   JVM-side cosine.  Right answer, O(Q*N) work; fine when Q is small or as
   the ground-truth for recall measurement.
-- LSH-bucketed ANN — the scale path: random-hyperplane (sign) signatures,
-  banded; candidates only meet within a bucket, so the join is
-  equality-keyed.  Planes are derived deterministically from xxhash64, so
-  results are reproducible without a stored model.
+- LSH-bucketed ANN — random-hyperplane (sign) signatures, banded;
+  candidates only meet within a bucket, so the join is equality-keyed.
+  Planes are derived deterministically from xxhash64, so results are
+  reproducible without a stored model.
+- quantized ANN — IVF inverted lists, product quantization (PQ) and
+  IVF-PQ with a persistable index: each query probes a few coarse lists.
+
+Every codebook (IVF coarse lists, PQ subspaces, the flat and two-level
+k-means behind SemDeDup) is trained by ONE Lloyd loop, :func:`_lloyd`,
+over ONE nearest-codebook kernel, :func:`_nearest`, and ONE fixed-point
+mean kernel, :func:`exact_centroid_means`.  Their driver collects run
+when the function is called — see :func:`_lloyd`.
 
 Embedding cosine near-dup reuses the brute-force machinery pairwise over a
 deterministic subsample (dedup verification is Q==N).
@@ -345,6 +353,119 @@ def _stratified_init_ids(
     )
 
 
+# one codebook entry as the in-row argmax scores it: vector, norm, id
+_ENTRY = StructType(
+    [
+        StructField("c", ArrayType(DoubleType())),
+        StructField("ncn", DoubleType()),
+        StructField("cid", LongType()),
+    ]
+)
+
+
+def _nearest(
+    frame: DataFrame, codebook: DataFrame, group_col: str | None = None
+) -> DataFrame:
+    """``frame`` plus ``centroid_id``: the codebook entry nearest to each
+    row's ``v`` by cosine — THE in-row argmax of the embedding family
+    (IVF lists, flat and two-level k-means, PQ subspaces).  One narrow
+    pass over ``frame``: zero shuffle, zero sort.
+
+    ``codebook`` is (``group_col``, centroid_id, centroid).  It is
+    collected here (codebook-sized by contract: k·dim doubles; a literal
+    frame collects without a job), each norm computed by Spark in the
+    collect projection, and folded into ONE ``from_json`` literal
+    (functions/frames.py).  Each row folds over its candidates with
+    ``array_max(transform(...))`` on the struct (sim, -centroid_id): sim
+    is dot/(|v|·|c|), cosine()'s exact expression tree, and equal sims go
+    to the lowest centroid id — the ordering of the max_by aggregate this
+    replaced (r10), so winners are bit-identical.  That aggregate's
+    struct-typed buffer forced a SortAggregate over all n·k scored rows
+    around an exchange on every Lloyd pass.
+
+    ``group_col``: each row scores only its own group's entries (the
+    two-level coarse list, the PQ subspace).  The literal is an array
+    indexed by the group key, so keys are small non-negative ints (the
+    callers' own codebook ids).  A row whose group has no entries raises
+    when it is scored instead of silently matching nothing; an empty
+    codebook raises ``ValueError`` here."""
+    cent_dtype = codebook.schema["centroid_id"].dataType.simpleString()
+    crows = sorted(
+        codebook.withColumn("_ncn", norm(F.col("centroid"))).collect(),
+        key=lambda r: r["centroid_id"],
+    )
+    if not crows:
+        raise ValueError("_nearest: empty codebook")
+    entries: dict = {}
+    for r in crows:
+        entries.setdefault(r[group_col] if group_col else None, []).append(
+            (list(r["centroid"]), float(r["_ncn"]), int(r["centroid_id"]))
+        )
+    if group_col is None:
+        cands = _literal_column(entries[None], ArrayType(_ENTRY))
+    else:
+        g, hi = F.col(group_col), max(entries)
+        table = _literal_column(
+            [entries.get(i) for i in range(hi + 1)], ArrayType(ArrayType(_ENTRY))
+        )
+        cands = F.coalesce(
+            F.when(g.between(0, hi), F.element_at(table, g + 1)),
+            F.raise_error(
+                F.concat(
+                    F.lit(f"_nearest: no codebook entries for {group_col}="),
+                    g.cast("string"),
+                )
+            ),
+        )
+    best = F.array_max(
+        F.transform(
+            cands,
+            lambda c: F.struct(
+                (
+                    dot(F.col("v"), c.getField("c"))
+                    / (F.col("_nv") * c.getField("ncn"))
+                ).alias("s"),
+                (-c.getField("cid")).alias("nc"),
+            ),
+        )
+    )
+    return frame.withColumn("_nv", norm(F.col("v"))).select(
+        *frame.columns, (-best.getField("nc")).cast(cent_dtype).alias("centroid_id")
+    )
+
+
+def _lloyd(
+    train: DataFrame,
+    centroids: DataFrame,
+    n_iters: int,
+    group_col: str | None = None,
+    scale: int = 1 << 20,
+) -> DataFrame:
+    """``n_iters`` Lloyd passes over ``train`` (id, v, ``group_col``) from
+    the ``centroids`` codebook (``group_col``, centroid_id, centroid):
+    assign with :func:`_nearest`, re-mean with
+    :func:`exact_centroid_means`.  THE Lloyd loop of the embedding family —
+    kmeans_exact, kmeans_two_level (grouped by coarse list),
+    pq_reconstruct (grouped by subspace) and ivf_build_centroids all train
+    through it.  Returns the final codebook (``centroids`` itself when
+    n_iters=0); a cluster that wins no row drops out.
+
+    Eager contract: the codebook collect in :func:`_nearest` and the k·dim
+    sum collect in :func:`exact_centroid_means` run Spark jobs WHEN THE
+    FUNCTION IS CALLED, not when its result is acted on — one of each per
+    pass, plus the codebook collect of the caller's final assignment (the
+    driver-side sums shape of Spark MLlib's KMeans).  So explain() on the
+    result shows none of that work: time and count jobs around the call,
+    not just the action.  Every public function that trains or applies a
+    codebook in this module inherits this contract."""
+    keys = (group_col,) if group_col else ()
+    for _ in range(n_iters):
+        centroids = exact_centroid_means(
+            _nearest(train, centroids, group_col), scale, (*keys, "centroid_id")
+        )
+    return centroids
+
+
 def ivf_build_centroids(
     vectors: DataFrame,
     id_col: str = "vec_id",
@@ -357,14 +478,10 @@ def ivf_build_centroids(
 
     Init: :func:`_stratified_init_ids` — residue strata with an occupancy
     check and scale-safe fallbacks; deterministic, no RNG, stable across
-    runs/executors, and NO global sort on any large corpus (the previous
-    id-ranked form funneled the whole corpus through a single-partition
-    ``row_number`` window).  Each Lloyd iteration: assign
-    every vector to its nearest centroid (broadcast centroids — the only
-    data motion is one shuffle for the element-wise mean).  Element-wise
-    means via posexplode + groupBy(cid, dim): dims are small (embedding
-    width), so the exploded frame is |corpus| x dim rows of three numeric
-    columns — cheap, fully codegen.
+    runs/executors, and NO global sort on any large corpus.  Training:
+    ``n_iters`` passes of :func:`_lloyd` — fixed-point exact means, and
+    collects that run when this is called (the eager contract stated
+    there).
 
     Returns (centroid_id int, centroid array<double>).
 
@@ -419,35 +536,7 @@ def ivf_build_centroids(
         centroids = firsts.select(
             "centroid_id", F.col("v").cast("array<double>").alias("centroid")
         )
-
-    for _ in range(n_iters):
-        assigned = ivf_assign(train, centroids, "id", "v")
-        exploded = assigned.select(
-            "centroid_id", F.posexplode(F.col("v").cast("array<double>")).alias("dim", "x")
-        )
-        sums = exploded.groupBy("centroid_id", "dim").agg(F.avg("x").alias("m"))
-        # k·dim per-dim means collected and re-emitted as a LITERAL frame
-        # (r10, VERDICT r9 item #3 — the MLlib Lloyd shape): one job per
-        # iteration instead of a per-consumer broadcast DAG build, the
-        # collect_list re-aggregation exchange gone, and no lineage to
-        # truncate (the old per-iteration localCheckpoint is obsolete).
-        # The avg VALUES are whatever this one execution computed — the
-        # same single evaluation the lazy checkpoint pinned before.
-        rows = sums.collect()
-        by_cid: dict[int, list[tuple[int, float]]] = {}
-        for r in rows:
-            by_cid.setdefault(r["centroid_id"], []).append((r["dim"], r["m"]))
-        schema = StructType(
-            [sums.schema["centroid_id"],
-             StructField("centroid", ArrayType(DoubleType()), False)]
-        )
-        centroids = _literal_frame(
-            vectors.sparkSession,
-            [(cid, [m for _, m in sorted(dims)]) for cid, dims in sorted(by_cid.items())],
-            schema,
-        )
-
-    return centroids
+    return _lloyd(train, centroids, n_iters)
 
 
 def ivf_assign(
@@ -457,78 +546,17 @@ def ivf_assign(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, v, centroid_id): nearest centroid per vector by cosine — ONE
-    narrow pass over the corpus, zero shuffle, zero sort.
+    narrow pass over the corpus, zero shuffle, zero sort (:func:`_nearest`
+    with no group).  The centroid collect runs when this is called (see
+    :func:`_lloyd`); an empty centroid frame raises ``ValueError``.
 
-    In-row argmax against the centroid codebook as a LITERAL array of
-    (vector, norm, id) structs (r10, VERDICT r9 item #1): each corpus row
-    folds over the k-entry array with ``array_max(transform(...))``, whose
-    comparison struct (sim desc, centroid_id asc via negation) encodes
-    EXACTLY the ordering the previous ``max_by`` aggregate used — winners
-    are bit-identical (value-hash-proven at sf0.1, r9 record).  The old
-    shape scored k broadcast copies per vector and collapsed them with
-    max_by, whose struct-typed ordering buffer is not hash-aggregable:
-    SortAggregate sorted all n·k scored rows on BOTH sides of an n-row
-    exchange — at 100 TB a full-corpus sort + shuffle per Lloyd pass, the
-    biggest scale term this layer had.  The r9 in-row attempt lost at
-    bench scale only because it built the literal through a
-    single-partition collect_list + broadcast DAG; with the centroid
-    frames now driver-side literals (see exact_centroid_means), the
-    codebook is already on the driver and the literal costs nothing.
-
-    Centroids are collected here (codebook-sized by contract — k·dim
-    doubles, the same rows every caller already collects for occupancy /
-    persistence); a LITERAL centroid frame collects without a job.  The
-    k norms are computed by Spark in the collect projection — the same
-    ``norm()`` expression the broadcast side evaluated before, so every
-    sim = dot/(|v|·|c|) is the identical expression tree per value.
     When k must GROW with n — constant-cluster-size clustering, the
     SemDeDup recipe — even n·k in-row cosines are the bottleneck; that
     regime belongs to kmeans_two_level, which scores only ~2·sqrt(k)
     centroids per vector."""
-    cent_dtype = centroids.schema["centroid_id"].dataType.simpleString()
-    crows = sorted(
-        centroids.withColumn("_ncn", norm(F.col("centroid"))).collect(),
-        key=lambda r: r["centroid_id"],
-    )
-    if not crows:
-        raise ValueError("ivf_assign: empty centroids frame")
-    # one from_json literal (functions/frames.py), NOT per-scalar F.lit:
-    # the py4j-per-scalar build cost ~1.8 s of driver time per codebook
-    # and a multi-thousand-node tree re-analyzed by every consumer (r10)
-    cents = _literal_column(
-        [
-            (list(r["centroid"]), float(r["_ncn"]), int(r["centroid_id"]))
-            for r in crows
-        ],
-        ArrayType(
-            StructType(
-                [
-                    StructField("c", ArrayType(DoubleType())),
-                    StructField("ncn", DoubleType()),
-                    StructField("cid", LongType()),
-                ]
-            )
-        ),
-    )
-    scored = F.transform(
-        cents,
-        lambda c: F.struct(
-            (
-                dot(F.col("v"), c.getField("c"))
-                / (F.col("_nv") * c.getField("ncn"))
-            ).alias("s"),
-            (-c.getField("cid")).alias("nc"),
-        ),
-    )
-    best = F.array_max(scored)
-    return (
-        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .withColumn("_nv", norm(F.col("v")))
-        .select(
-            "id",
-            "v",
-            (-best.getField("nc")).cast(cent_dtype).alias("centroid_id"),
-        )
+    return _nearest(
+        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
+        centroids,
     )
 
 
@@ -545,21 +573,23 @@ def kmeans_exact(
 
     Same deterministic stratified init as the IVF quantizer
     (:func:`_stratified_init_ids` — no RNG, no global sort on any large
-    corpus, occupancy-checked).  The difference is the mean step: components are fixed-point scaled (floor of x·2^scale_bits)
-    BEFORE summing, so each Lloyd mean is an exact integer sum followed by
-    one IEEE division — order-independent, hence bit-identical on any
+    corpus, occupancy-checked) and the same :func:`_lloyd` loop.  Its mean
+    step is fixed-point: components are scaled (floor of x·scale) BEFORE
+    summing, so each Lloyd mean is an exact integer sum followed by one
+    IEEE division — order-independent, hence bit-identical on any
     partitioning and in any engine (float accumulation is neither; see
     label_centroids).  That exactness is what lets cluster ASSIGNMENTS be
     oracle-checked, not just sketched: every engine computing the same
     means computes the same argmax-cosine assignment (modulo genuinely
     tied similarities, broken by centroid id).
 
-    Scale: centroids broadcast (k·dim doubles); per iteration ONE shuffle
-    for the elementwise sums keyed on (centroid_id, dim) — k·dim groups,
-    fully partial-aggregable; assignment itself is a narrow broadcast pass.
+    Scale: the codebook (k·dim doubles) is collected to the driver and
+    folded into the plan as a literal; per iteration ONE shuffle for the
+    elementwise sums keyed on (centroid_id, dim) — k·dim groups, fully
+    partial-aggregable; assignment itself is a narrow in-row pass.
     Lloyd iteration count is a fixed small constant, so the whole operator
-    is O(iters) scans with no driver-side convergence loop (callers who
-    want convergence detection can compare successive centroid frames)."""
+    is O(iters) scans with no driver-side convergence loop.  The Lloyd
+    collects run when this is called (see :func:`_lloyd`)."""
     vecs = vectors.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
@@ -568,12 +598,7 @@ def kmeans_exact(
     # per build just to read k rows (r9 optimization)
     init = _stratified_init_ids(vecs, k, vec_col="v")
     centroids = init.select("centroid_id", F.col("v").alias("centroid"))
-    for _ in range(n_iters):
-        assigned = ivf_assign(vecs, centroids, "id", "v")
-        # literal frame (one collect job per iteration, MLlib-style) — no
-        # lineage to truncate, so the old per-iteration checkpoint is gone
-        centroids = exact_centroid_means(assigned, scale)
-    return ivf_assign(vecs, centroids, "id", "v")
+    return _nearest(vecs, _lloyd(vecs, centroids, n_iters, scale=scale))
 
 
 def exact_centroid_means(
@@ -584,26 +609,21 @@ def exact_centroid_means(
     """(*group_cols, centroid array<double>): fixed-point exact elementwise
     means of a (.., v, *group_cols) assignment — integer sums are
     order-independent, so the means are bit-identical on any partitioning
-    and in any engine.  THE single fixed-point-mean implementation: the
-    flat Lloyd step (centroid_id), the PQ subspace step (sub, centroid_id),
-    and the two-level sub step (coarse_id, sub_id) all call it, so the
-    'bit-identical cross-engine' contract cannot silently diverge between
-    paths (code-review r4).
+    and in any engine.  THE single mean kernel: every :func:`_lloyd` pass
+    and the PQ reconstruction codebook call it, so the 'bit-identical
+    cross-engine' contract cannot silently diverge between paths.
 
-    Returns a LITERAL frame (r10 optimization, VERDICT r9 item #3): the
-    k·dim (group, dim) integer sums — codebook-sized and corpus-
-    independent, the same rows Spark MLlib's Lloyd step collects every
-    iteration — are collected in ONE job and the means assembled driver-
-    side.  The old second aggregate (k·dim rows re-shuffled into
-    collect_list arrays) and its exchange are gone, and every downstream
-    broadcast of the centroid frame becomes a LocalTableScan instead of a
-    multi-stage DAG build: the sequential per-Lloyd-pass job chain this
-    layer paid (3 exchanges per pass, each an AQE stage-job) collapses to
-    one.  Values are bit-identical: the division s/(n·scale) is the same
-    IEEE double op in Python as in the removed Spark projection, and
-    long→double conversion rounds identically."""
+    Returns a LITERAL frame (r10, the Spark MLlib Lloyd shape): the k·dim
+    (group, dim) integer sums — codebook-sized and corpus-independent —
+    are collected in ONE job when this is called (see :func:`_lloyd`) and
+    the means assembled driver-side, so every downstream consumer reads a
+    LocalTableScan instead of re-running a multi-stage DAG.  Values are
+    bit-identical to a Spark-side division: s/(n·scale) is the same IEEE
+    double op in Python, and long→double conversion rounds identically."""
     gcols = list(group_cols)
-    comp = assigned.select(*gcols, F.posexplode("v").alias("dim", "x"))
+    comp = assigned.select(
+        *gcols, F.posexplode(F.col("v").cast("array<double>")).alias("dim", "x")
+    )
     sums = comp.groupBy(*gcols, "dim").agg(
         F.sum(F.floor(F.col("x") * scale)).alias("s"),
         F.count(F.lit(1)).alias("n"),
@@ -661,56 +681,20 @@ def kmeans_two_level(
     cluster_size work.  Measured: 10x vectors with 10x k cost ~30x wall
     time; another decade would be hours.  Two-level assignment scores
     n*(k1 + k2) ~ 2n*sqrt(k) cosines — at k=800 that is 14x less work,
-    and the refinement join fans each vector only to ITS coarse list's
-    sub-centroids (equality join on the coarse id against a broadcast
-    k-row table), so the decade scaling returns to ~linear.
+    and the refinement scores each vector only against ITS coarse list's
+    sub-centroids (:func:`_nearest` grouped by coarse_id), so the decade
+    scaling returns to ~linear.
 
     Same determinism guarantees as kmeans_exact: stratified min-id init
-    per (coarse_id, id mod k2) stratum, fixed-point exact means, ties
-    broken by sub-centroid id — reproducible on any partitioning."""
+    per (coarse_id, rank stratum), fixed-point exact means, ties broken by
+    sub-centroid id — reproducible on any partitioning.  Both levels train
+    through :func:`_lloyd`, whose collects run when this is called."""
     k1, k2 = two_level_split(k)
     coarse = kmeans_exact(vectors, id_col, vec_col, k=k1, n_iters=coarse_iters,
                           scale=scale)
     vecs = coarse.select(
         "id", "v", F.col("centroid_id").alias("coarse_id")
     ).localCheckpoint(eager=False)
-
-    def assign(sub_centroids: DataFrame) -> DataFrame:
-        # same narrow argmax as ivf_assign, but the broadcast array is
-        # per-COARSE-list: each vector folds over only its own list's k2
-        # sub-centroids — no scored-row explosion, no shuffle.  Norms are
-        # hoisted out of the fold: |v| once per vector, |c| pre-baked into
-        # the broadcast struct (sim = dot/(|v|·|c|) — cosine()'s exact
-        # expression tree, bit-identical winners).
-        per_list = F.broadcast(
-            sub_centroids.withColumn("_ncn", norm(F.col("centroid")))
-            .groupBy("coarse_id")
-            .agg(
-                F.collect_list(F.struct("sub_id", "centroid", "_ncn")).alias("_subs")
-            )
-        )
-        scored = F.transform(
-            F.col("_subs"),
-            lambda c: F.struct(
-                (
-                    dot(F.col("v"), c.getField("centroid"))
-                    / (F.col("_nv") * c.getField("_ncn"))
-                ).alias("s"),
-                (-c.getField("sub_id").cast("int")).alias("negsid"),
-            ),
-        )
-        best = F.array_max(scored)
-        return (
-            vecs.withColumn("_nv", norm(F.col("v")))
-            .join(per_list, "coarse_id")
-            .select(
-                "id", "v", "coarse_id", (-best.getField("negsid")).alias("sub_id")
-            )
-        )
-
-    def sub_means(assigned: DataFrame) -> DataFrame:
-        return exact_centroid_means(assigned, scale, ("coarse_id", "sub_id"))
-
     # rank-proportional strata WITHIN each coarse list, not raw-id residues:
     # a list's members are an arbitrary content-correlated id subset (ids
     # assigned per-source with stride 2 leave every odd residue empty), so
@@ -727,18 +711,18 @@ def kmeans_two_level(
     init = _rank_stratified_min_ids(
         vecs.select("coarse_id", "id", "v"), k2, partition_cols=("coarse_id",),
         vec_col="v",
-    ).withColumnRenamed("centroid_id", "sub_id")
-    sub_centroids = init.select(
-        "coarse_id", "sub_id", F.col("v").alias("centroid")
     )
-    for _ in range(n_iters):
-        # sub_means returns a literal frame — no lineage checkpoint needed
-        sub_centroids = sub_means(assign(sub_centroids))
-    final = assign(sub_centroids)
-    return final.select(
+    sub_centroids = _lloyd(
+        vecs,
+        init.select("coarse_id", "centroid_id", F.col("v").alias("centroid")),
+        n_iters,
+        "coarse_id",
+        scale,
+    )
+    return _nearest(vecs, sub_centroids, "coarse_id").select(
         "id",
         "v",
-        (F.col("coarse_id") * F.lit(k2) + F.col("sub_id")).cast("int").alias(
+        (F.col("coarse_id") * F.lit(k2) + F.col("centroid_id")).cast("int").alias(
             "centroid_id"
         ),
     )
@@ -816,21 +800,22 @@ def pq_reconstruct(
     vector as its m centroid codes — m·log2(k) bits instead of dim floats
     (here 4x4 bits vs 64 floats, a 128x compression).  This is the layout
     100 TB ANN actually ships (IVF-PQ): the codebook is m·k·(dim/m) doubles
-    (broadcastable at any corpus size), encoding is a broadcast argmax pass
-    per subspace, and distances are computed against reconstructions
+    (broadcastable at any corpus size), encoding is one in-row argmax
+    pass per subspace, and distances are computed against reconstructions
     without touching raw vectors.
 
     Returns (id, v, codes array<int>[m], recon array<double>[dim]).
 
-    All m subspace k-means run in ONE subspace-keyed DAG — `sub` simply
-    joins every grouping key (stratified init, nearest-centroid window,
-    fixed-point mean aggregation), so the job count is independent of m
-    (the sequential per-subspace form ran m full k-means pipelines
-    back-to-back: ~4x the wall time at m=4 from driver/job overhead alone,
-    and m round-trips on a cluster).  Same init, Lloyd steps, metric, and
-    fixed-point arithmetic as kmeans_exact, so codes and reconstructions
-    are bit-identical cross-engine — the quality verdict in plans/llm.py
-    is deterministic.
+    All m subspace k-means run in ONE subspace-keyed DAG — :func:`_lloyd`
+    grouped by `sub` (each sub-vector scores only its own subspace's
+    codebook, and `sub` joins the mean aggregation key), so the job count
+    is independent of m (the sequential per-subspace form ran m full
+    k-means pipelines back-to-back: ~4x the wall time at m=4 from
+    driver/job overhead alone, and m round-trips on a cluster).  Same
+    init, Lloyd loop, metric, and fixed-point arithmetic as kmeans_exact,
+    so codes and reconstructions are bit-identical cross-engine — the
+    quality verdict in plans/llm.py is deterministic.  The Lloyd collects
+    run when this is called (see :func:`_lloyd`).
 
     ``train_sample_mod``: FAISS-style train-on-sample (see
     :func:`ivf_build_centroids`).  When set, the subspace Lloyd loop runs
@@ -863,71 +848,6 @@ def pq_reconstruct(
             F.array(*[F.slice(checked, j * sub_d + 1, sub_d) for j in range(m)])
         ).alias("sub", "v"),
     ).localCheckpoint(eager=False)
-
-    def assign(frame: DataFrame, cents: DataFrame) -> DataFrame:
-        # In-row argmax against the per-subspace codebook as a literal
-        # (r10, same rewrite as ivf_assign — see its docstring): the old
-        # max_by aggregate's struct ordering buffer forced SortAggregate,
-        # sorting all n·m sub-vector rows around an exchange every Lloyd
-        # pass; the literal-indexed transform scores each (sub, id) row
-        # in place with zero shuffle and the identical (sim desc, cid
-        # asc) comparison — bit-identical codes.  element_at(sub + 1) is
-        # in-range by construction: sub comes from the m-way posexplode.
-        cent_dtype = cents.schema["centroid_id"].dataType.simpleString()
-        crows = cents.withColumn("_ncn", norm(F.col("centroid"))).collect()
-        by_sub: dict[int, list] = {}
-        for r in crows:
-            by_sub.setdefault(r["sub"], []).append(r)
-        missing = [s for s in range(m) if s not in by_sub]
-        if missing:
-            raise ValueError(
-                f"pq_reconstruct: no centroids for subspace(s) {missing}"
-            )
-        # one from_json literal per assign (functions/frames.py), NOT
-        # per-scalar F.lit — see ivf_assign
-        per_sub = _literal_column(
-            [
-                [
-                    (list(r["centroid"]), float(r["_ncn"]), int(r["centroid_id"]))
-                    for r in sorted(by_sub[s], key=lambda r: r["centroid_id"])
-                ]
-                for s in range(m)
-            ],
-            ArrayType(
-                ArrayType(
-                    StructType(
-                        [
-                            StructField("c", ArrayType(DoubleType())),
-                            StructField("ncn", DoubleType()),
-                            StructField("cid", LongType()),
-                        ]
-                    )
-                )
-            ),
-        )
-        scored = F.transform(
-            F.element_at(per_sub, F.col("sub") + 1),
-            lambda c: F.struct(
-                (
-                    dot(F.col("v"), c.getField("c"))
-                    / (F.col("_nv") * c.getField("ncn"))
-                ).alias("s"),
-                (-c.getField("cid")).alias("nc"),
-            ),
-        )
-        best = F.array_max(scored)
-        return (
-            frame.withColumn("_nv", norm(F.col("v")))
-            .select(
-                "sub",
-                "id",
-                "v",
-                (-best.getField("nc")).cast(cent_dtype).alias("centroid_id"),
-            )
-        )
-
-    def means(assigned: DataFrame) -> DataFrame:
-        return exact_centroid_means(assigned, scale, ("sub", "centroid_id"))
 
     if train_sample_mod is not None:
         train_subs = subs.filter(
@@ -972,16 +892,17 @@ def pq_reconstruct(
     centroids = F.broadcast(init).join(train_subs, ["sub", "id"]).select(
         "sub", "centroid_id", F.col("v").alias("centroid")
     )
-    for _ in range(n_iters):
-        # literal frame per iteration (exact_centroid_means collects the
-        # codebook-sized sums) — no lineage checkpoint needed
-        centroids = means(assign(train_subs, centroids))
+    centroids = _lloyd(train_subs, centroids, n_iters, "sub", scale)
     # two consumers (codebook aggregation + the code join) — materialize once
-    asg = assign(subs, centroids).localCheckpoint(eager=False)
+    asg = _nearest(subs, centroids, "sub").localCheckpoint(eager=False)
     # full-corpus path: recon = mean of the final assignment (oracle
     # semantics); sampled path: recon = the trained codebook itself, so no
     # full-corpus mean shuffle is added
-    codebook = means(asg) if train_sample_mod is None else centroids
+    codebook = (
+        exact_centroid_means(asg, scale, ("sub", "centroid_id"))
+        if train_sample_mod is None
+        else centroids
+    )
     coded = asg.join(F.broadcast(codebook), ["sub", "centroid_id"]).select(
         "id",
         "sub",
