@@ -8,11 +8,22 @@ data.
 
 Layout:
 
-    <table>/_commits/00000042        text file naming the snapshot's data dir
+    <table>/_commits/00000042        manifest: line 1 names the snapshot's
+                                     data dir; lines 2+ are key=value
+                                     metadata (a caller's ``meta``, e.g. the
+                                     streaming batch_id/ckpt_gen stamps, and
+                                     the reserved ``schema`` key: the JSON
+                                     schema of the data dir as the parquet
+                                     reader returns it)
     <table>/data_v00000042_ab12cd34/ immutable parquet snapshot (per-writer
                                      random suffix — racing writers never
                                      share a dir; the manifest is the only
                                      name readers follow)
+
+``read`` hands the recorded schema to the parquet reader, so resolving a
+version starts no Spark job (schema inference runs one per read); a
+manifest without the key, as older writers published, still reads through
+inference.
 
 A commit writes its data dir, then publishes a manifest via
 write-temp + rename-without-overwrite.  On HDFS-compatible filesystems that
@@ -32,14 +43,35 @@ just remain until vacuumed).
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+# manifest metadata key holding the data dir's schema (commit() writes it,
+# read() uses it); reserved — a caller's meta may not set it
+_SCHEMA_KEY = "schema"
 
 
 class ConcurrentCommitError(RuntimeError):
     """Another writer committed this version first — reload and retry."""
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable — the
+    schema a parquet read of the written data reports (file sources read
+    every column as nullable), so the recorded schema equals inference."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
 
 
 def _fs(spark: SparkSession, path: str):
@@ -116,22 +148,24 @@ class SnapshotTable:
         h = self.history()
         return h[-1] if h else None
 
-    def _manifest_text(self, version: int) -> str:
+    def _manifest_entry(self, version: int) -> tuple[str, dict[str, str]]:
+        """A commit's manifest as (data dir, key=value metadata)."""
         text = read_small_text(self.spark, f"{self.commits_dir}/{version:08d}")
         if text is None:
             raise ValueError(f"version {version} does not exist at {self.path}")
-        return text.strip()
+        data_dir, *lines = text.strip().splitlines()
+        return data_dir, dict(ln.split("=", 1) for ln in lines if "=" in ln)
 
     def _manifest(self, version: int) -> str:
         """The snapshot data dir named by a commit (manifest line 1; later
         lines are key=value metadata, see commit_meta)."""
-        return self._manifest_text(version).splitlines()[0]
+        return self._manifest_entry(version)[0]
 
     def commit_meta(self, version: int) -> dict[str, str]:
         """key=value metadata recorded with a commit (e.g. the streaming
-        batch_id that produced it); empty for metadata-less commits."""
-        lines = self._manifest_text(version).splitlines()[1:]
-        return dict(ln.split("=", 1) for ln in lines if "=" in ln)
+        batch_id that produced it, and the reserved ``schema`` key); empty
+        for metadata-less commits."""
+        return self._manifest_entry(version)[1]
 
     def _publish(self, version: int, data_dir: str, meta: dict[str, str] | None = None) -> None:
         """Atomically publish a manifest via rename-without-overwrite (CAS
@@ -189,9 +223,19 @@ class SnapshotTable:
         winner's already-published snapshot bytes (code-review r4 — the
         exact torn state the CAS log exists to prevent).  With unique dirs
         the loser's bytes are garbage the loser itself deletes on
-        ConcurrentCommitError; the manifest is the only name readers follow."""
+        ConcurrentCommitError; the manifest is the only name readers follow.
+
+        The manifest also records ``df``'s schema under the reserved
+        ``schema`` key (see the module docstring); a ``meta`` that sets that
+        key raises ValueError."""
         import uuid
 
+        if meta is not None and _SCHEMA_KEY in meta:
+            raise ValueError(
+                f"SnapshotTable.commit: meta key {_SCHEMA_KEY!r} is reserved "
+                "for the snapshot schema the commit records"
+            )
+        schema_json = _as_nullable(df.schema).json()
         if expected_base is not None:
             version = expected_base + 1
         else:
@@ -204,7 +248,7 @@ class SnapshotTable:
         data_dir = f"data_v{version:08d}_{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(f"{self.path}/{data_dir}")
         try:
-            self._publish(version, data_dir, meta)
+            self._publish(version, data_dir, {**(meta or {}), _SCHEMA_KEY: schema_json})
         except ConcurrentCommitError:
             _, fs = _fs(self.spark, self.path)
             fs.delete(self._jpath(f"{self.path}/{data_dir}"), True)
@@ -309,8 +353,9 @@ class SnapshotTable:
         Raises if the target's data dir has been vacuumed: its manifest
         still lists in history(), but re-publishing the deleted dir would
         make the dangling path the table's LATEST and break every
-        subsequent read (code-review r4)."""
-        data_dir = self._manifest(version)
+        subsequent read (code-review r4).  The target's recorded schema, if
+        any, is carried into the new manifest."""
+        data_dir, meta = self._manifest_entry(version)
         _, fs = _fs(self.spark, self.path)
         if not fs.exists(self._jpath(f"{self.path}/{data_dir}")):
             raise ValueError(
@@ -319,18 +364,24 @@ class SnapshotTable:
                 "vacuum retention window are restorable"
             )
         new_version = (self.latest_version() or 0) + 1
-        self._publish(new_version, data_dir)
+        schema = meta.get(_SCHEMA_KEY)
+        self._publish(new_version, data_dir, None if schema is None else {_SCHEMA_KEY: schema})
         return new_version
 
     # --- read -----------------------------------------------------------
 
     def read(self, version: int | None = None) -> DataFrame:
-        """The table as of ``version`` (default: latest)."""
+        """The table as of ``version`` (default: latest).  Starts no Spark
+        job when the manifest records the schema; infers it otherwise."""
         if version is None:
             version = self.latest_version()
             if version is None:
                 raise ValueError(f"no commits yet at {self.path}")
-        return self.spark.read.parquet(f"{self.path}/{self._manifest(version)}")
+        data_dir, meta = self._manifest_entry(version)
+        reader = self.spark.read
+        if _SCHEMA_KEY in meta:
+            reader = reader.schema(StructType.fromJson(json.loads(meta[_SCHEMA_KEY])))
+        return reader.parquet(f"{self.path}/{data_dir}")
 
     def diff(
         self,

@@ -29,6 +29,9 @@ from itertools import chain
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
+
+from european_emissions_data_warehouse_spark.functions.frames import literal_frame
 
 # The 30-entry country code -> name dimension, hard-coded in the reference
 # (scripts/etl_process.py:33-64) with a TODO to make it a real table — here it
@@ -52,9 +55,17 @@ OUTPUT_COLUMNS = ["Country", "Year", "Scenario", "Category", "Gas", "ReportedVal
 
 
 def country_dim(spark: SparkSession) -> DataFrame:
-    """The code->name dimension as a DataFrame (FIXTURES.md F2)."""
-    rows = [(code, name) for code, name in COUNTRY_CODE_MAP.items()]
-    return spark.createDataFrame(rows, "CountryCode string, Country string")
+    """The code->name dimension as a DataFrame (FIXTURES.md F2).
+
+    Built as a folded JVM literal (functions/frames.literal_frame), not
+    ``spark.createDataFrame``: the broadcast of a Python-RDD-backed dim
+    runs one Python-worker task per core to ship 30 rows, costlier than
+    the clean write itself.  The literal's broadcast job runs in the JVM
+    only."""
+    schema = StructType(
+        [StructField("CountryCode", StringType()), StructField("Country", StringType())]
+    )
+    return literal_frame(spark, list(COUNTRY_CODE_MAP.items()), schema)
 
 
 def clean_emissions(raw: DataFrame, decode: str = "join") -> DataFrame:

@@ -19,10 +19,14 @@ restarts; the merge makes re-processing *idempotent* on the key — together
 they match the reference's at-least-once delivery + idempotent upsert
 (SURVEY.md §2.2 streaming row).
 
-At scale: maxFilesPerTrigger bounds micro-batch size; the merge's anti-join
-broadcasts the (small) incoming batch against the warehouse, so steady-state
-cost is one warehouse scan per trigger — switch the sink to a transactional
-format (Delta/Iceberg MERGE) to avoid even that rewrite."""
+At scale: maxFilesPerTrigger bounds micro-batch size.  Per trigger,
+run_snapshot_ingest resolves the current snapshot through the schema its
+manifest records (no schema-inference job), and the merge's anti join
+takes the (small) incoming batch's keys as they are — no distinct, since
+duplicate keys cannot change an anti join — so steady-state cost is the
+batch materialization plus one warehouse scan and snapshot rewrite per
+trigger.  Switch the sink to a transactional format (Delta/Iceberg MERGE)
+to avoid even that rewrite."""
 
 from __future__ import annotations
 
@@ -182,7 +186,7 @@ def run_incremental_upsert(
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         # materialized: upsert_anti_join references `cleaned` twice
-        # (distinct-key frame + union) — without this the batch input
+        # (key frame + union) — without this the batch input
         # re-scans and the dedupe window re-runs per trigger (code-review
         # r4, streaming scale pass)
         cleaned = dedupe_last(batch, key, order_by).localCheckpoint(eager=False)

@@ -15,6 +15,7 @@ import math
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from european_emissions_data_warehouse_spark.operators.merge import (
     check_unique,
@@ -56,6 +57,55 @@ class TestMergeLaws:
         once = upsert_anti_join(old_df, new_df, ["k"])
         twice = upsert_anti_join(once, new_df, ["k"])
         assert sorted(map(tuple, once.collect())) == sorted(map(tuple, twice.collect()))
+
+
+# --- anti-join key side: duplicates cannot change the output -----------------
+#
+# upsert_anti_join builds its key side WITHOUT a distinct; an anti join keeps
+# an old row iff no right-side row matches, so the old distinct form must give
+# the same rows for any input — duplicate and NULL keys in `new` included
+# (the raw, un-deduplicated batch is exactly the input this law is about).
+
+nkey = st.one_of(st.none(), st.integers(0, 3))
+krow = st.tuples(nkey, nkey, st.integers(0, 1000))
+kframe = st.lists(krow, min_size=0, max_size=12)
+
+
+def _kdf(spark, rows):
+    return spark.createDataFrame(
+        rows or [(None, None, None)], "k1 int, k2 int, v int"
+    ).filter(F.lit(bool(rows)))
+
+
+def _anti_join_distinct(old, new, key):
+    """upsert_anti_join as it was, with the key-side distinct."""
+    nk = new.select(*[F.col(k).alias(f"__nk_{k}") for k in key]).distinct()
+    cond = None
+    for k in key:
+        c = old[k].eqNullSafe(F.col(f"__nk_{k}"))
+        cond = c if cond is None else cond & c
+    return old.join(nk, on=cond, how="left_anti").unionByName(new).select(*old.columns)
+
+
+@given(old=kframe, new=kframe)
+@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
+def test_anti_join_key_side_needs_no_distinct(spark, old, new):
+    old_df, new_df = _kdf(spark, old), _kdf(spark, new)
+    rows = lambda df: sorted(map(repr, df.collect()))  # noqa: E731 — NULL-safe sort key
+    key = ["k1", "k2"]
+    assert rows(upsert_anti_join(old_df, new_df, key)) == rows(
+        _anti_join_distinct(old_df, new_df, key)
+    )
+
+
+def test_anti_join_key_side_has_no_aggregate(spark):
+    old = spark.range(50).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    new = spark.range(0, 100, 3).select(F.col("id").alias("k"), F.lit(-1).alias("v"))
+    df = upsert_anti_join(old, new, ["k"])
+    df.collect()  # the final adaptive plan
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "left_anti" in plan.lower() or "LeftAnti" in plan, plan
+    assert not [ln for ln in plan.splitlines() if "HashAggregate" in ln and "__nk_" in ln], plan
 
 
 # --- SemDeDup block-pairing law ----------------------------------------------

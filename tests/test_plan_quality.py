@@ -672,3 +672,30 @@ def test_round8_incremental_store_probe_broadcasts_batch_not_store(
                     break  # reached the probe join — path is clean
                 d = dj
             j -= 1
+
+
+def test_country_dim_broadcasts_as_jvm_literal(spark, tmp_path):
+    """The O9 join decode broadcasts a dim built as a folded JVM literal:
+    a createDataFrame dim is a Scan ExistingRDD over a PythonRDD, whose
+    broadcast launched one Python-worker task per core on every clean."""
+    from european_emissions_data_warehouse_spark.plans.emissions import (
+        TOTAL_GHG_RAW,
+        clean_emissions,
+    )
+    from european_emissions_data_warehouse_spark.sources.readers import read_csv
+    from european_emissions_data_warehouse_spark.sources.schemas import (
+        EMISSIONS_RAW_SCHEMA,
+    )
+
+    path = tmp_path / "raw.csv"
+    header = ",".join(f.name for f in EMISSIONS_RAW_SCHEMA.fields)
+    path.write_text(
+        f"{header}\n"
+        f'DE,2025,WEM,Energy,"{TOTAL_GHG_RAW}",1.5,2022,E\n'
+        f'FR,2030,WAM,Energy,"{TOTAL_GHG_RAW}",2.5,2022,\n'
+    )
+    df = clean_emissions(read_csv(spark, str(path), EMISSIONS_RAW_SCHEMA), decode="join")
+    assert sorted(r["Country"] for r in df.collect()) == ["France", "Germany"]
+    plan = _executed(df)
+    assert "BroadcastHashJoin" in plan, plan
+    assert "PythonRDD" not in plan and "ExistingRDD" not in plan, plan

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from european_emissions_data_warehouse_spark.operators.snapshots import (
     ConcurrentCommitError,
     SnapshotTable,
+    write_small_text,
 )
 from european_emissions_data_warehouse_spark.sources.readers import load_table
 
@@ -354,3 +355,83 @@ def test_commit_expected_base_detects_interleaved_commit(spark, nation, tmp_path
     v = t.commit(t.read(fresh).limit(3), expected_base=fresh)
     assert v == fresh + 1
     assert t.history() == [0, 1, 2]
+
+
+def _schema_data(spark):
+    # non-nullable top-level, array-element, struct-field and map-value
+    # types: the recorded schema must carry them the way a parquet read
+    # reports them (everything nullable)
+    return spark.range(4).select(
+        F.col("id"),
+        F.array(F.col("id"), F.lit(1)).alias("arr"),
+        F.struct(F.col("id").alias("inner"), F.lit("x").alias("tag")).alias("st"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+    )
+
+
+def _recorded_schema(t, version):
+    import json
+
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(t.commit_meta(version)["schema"]))
+
+
+def test_commit_records_schema_equal_to_inference(spark, tmp_path):
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.commit(_schema_data(spark))
+    inferred = spark.read.parquet(str(tmp_path / "tbl" / t._manifest(0))).schema
+    assert _recorded_schema(t, 0) == inferred
+    assert t.read(0).schema == inferred
+
+
+def _jobs_started_by(spark, fn) -> list[int]:
+    sc = spark.sparkContext
+    group = f"snapshot-read-{id(fn)}"
+    sc.setJobGroup(group, "snapshot read probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_of_stamped_version_starts_no_job(spark, tmp_path):
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.commit(_schema_data(spark))
+    assert _jobs_started_by(spark, lambda: t.read(0)) == []
+    # control: the same data dir read through inference does start a job,
+    # so the zero above is the schema's doing, not a blind probe
+    d = str(tmp_path / "tbl" / t._manifest(0))
+    assert _jobs_started_by(spark, lambda: spark.read.parquet(d)) != []
+
+
+def test_manifest_without_schema_reads_through_inference(spark, nation, tmp_path):
+    """A manifest written before schemas were recorded holds only the data
+    dir line (plus any caller meta); it must still read."""
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.commit(nation)
+    write_small_text(spark, str(tmp_path / "tbl" / "_commits" / "00000000"), t._manifest(0))
+    assert "schema" not in t.commit_meta(0)
+    got = t.read()
+    assert got.schema == nation.schema
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, nation.collect()))
+
+
+def test_rollback_carries_schema(spark, nation, tmp_path):
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.commit(nation)
+    t.commit(_schema_data(spark))
+    v2 = t.rollback(0)
+    assert t.commit_meta(v2)["schema"] == t.commit_meta(0)["schema"]
+    assert _jobs_started_by(spark, lambda: t.read(v2)) == []
+    assert t.read().columns == nation.columns
+
+
+def test_meta_cannot_use_reserved_schema_key(spark, nation, tmp_path):
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    with pytest.raises(ValueError, match="reserved"):
+        t.commit(nation, meta={"batch_id": "0", "schema": "{}"})
+    assert t.history() == []
+    assert not (tmp_path / "tbl").exists()
