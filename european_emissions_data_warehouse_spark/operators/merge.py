@@ -17,9 +17,9 @@ Reference parity for the Postgres load path (SURVEY.md §2.1 O13–O17):
 Scale notes (100 TB): the anti-join form shuffles both sides on the key once —
 with the incoming batch typically small relative to the warehouse, AQE turns
 the anti join into a broadcast and the only shuffle left is the final write.
-The key side is the incoming batch's key projection as-is, with no
-``distinct``: duplicate right-side keys cannot change an anti join's output,
-so a distinct there was an extra shuffle plus aggregate per merge.
+The key side is the incoming batch's key projection with no ``distinct``:
+duplicate right-side keys cannot change an anti join's output, so
+deduplicating them would only add a shuffle and an aggregate per merge.
 The window form shuffles the union once on the key; prefer it when old/new are
 comparable in size.  With a transactional table format (Delta/Iceberg) this
 operator maps 1:1 onto MERGE INTO; the relational forms here are
@@ -51,8 +51,8 @@ def upsert_anti_join(old: DataFrame, new: DataFrame, key: Sequence[str]) -> Data
     The key side is NOT deduplicated: an anti join keeps an old row iff no
     right-side row matches it, and whether one or several rows match makes
     no difference, so duplicate keys in ``new`` (NULL keys included) leave
-    the output unchanged — a ``distinct`` there only added a shuffle and an
-    aggregate.
+    the output unchanged, and a ``distinct`` there would only add a shuffle
+    and an aggregate.
     """
     key = list(key)
     nk = new.select(*[F.col(k).alias(f"__nk_{k}") for k in key])
